@@ -55,6 +55,7 @@ object Graft {
   def install(spark: SparkSession): SparkSession = {
     functions.GraftFunctions.register(spark)
     functions.SortedIntersectCount.register(spark)
+    functions.FirstCommonBounded.register(spark)
     functions.FirstBandCollision.register(spark)
     functions.TextFunctions.registerSql(spark)
     functions.HyperLogLog.registerSql(spark)

@@ -35,8 +35,11 @@ object Verify {
     // partitions), and the dump runs exactly the plans a checkpoint-
     // dir-configured production session would run. Also silences the
     // "locally checkpointed RDD cannot be recomputed" unpersist
-    // warnings that used to fill this tool's output.
-    spark.sparkContext.setCheckpointDir(s"$outDir/_ckpt")
+    // warnings that used to fill this tool's output. The dir lives
+    // outside outDir, so the dump holds only query outputs, and is
+    // deleted before the session stops.
+    val ckpt = Files.createTempDirectory("graft-verify-ckpt")
+    spark.sparkContext.setCheckpointDir(ckpt.toString)
     SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -67,6 +70,7 @@ object Verify {
     val json = SparkEntry.oracleSql.filter(kv => selected(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    org.apache.commons.io.FileUtils.deleteDirectory(ckpt.toFile)
     spark.stop()
   }
 }

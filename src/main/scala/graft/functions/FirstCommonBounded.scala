@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, QuaternaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -94,8 +95,12 @@ object FirstCommonBounded {
     call_function("first_common_bounded", a, b, na, nb)
   }
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "first_common_bounded",
-      exprs => FirstCommonBounded(exprs(0), exprs(1), exprs(2), exprs(3)), "scala_udf")
+  /** Registers once per session: a repeat call is a no-op, not a
+    * replacement that logs a warning. */
+  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier("first_common_bounded")))
+      registry.createOrReplaceTempFunction("first_common_bounded",
+        exprs => FirstCommonBounded(exprs(0), exprs(1), exprs(2), exprs(3)), "scala_udf")
+  }
 }

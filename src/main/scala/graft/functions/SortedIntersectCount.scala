@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -93,8 +94,12 @@ object SortedIntersectCount {
     call_function("sorted_intersect_count", a, b)
   }
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_intersect_count",
-      exprs => SortedIntersectCount(exprs(0), exprs(1)), "scala_udf")
+  /** Registers once per session: a repeat call is a no-op, not a
+    * replacement that logs a warning. */
+  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier("sorted_intersect_count")))
+      registry.createOrReplaceTempFunction("sorted_intersect_count",
+        exprs => SortedIntersectCount(exprs(0), exprs(1)), "scala_udf")
+  }
 }

@@ -216,46 +216,43 @@ class DedupSpec extends SparkSpec {
     import spark.implicits._
     val rnd = new scala.util.Random(14)
     val vocab = ('a' to 'z').map(_.toString)
-    val docs = (1L to 120L).map { i =>
+    val random = (1L to 120L).map { i =>
       val nt = 2 + rnd.nextInt(10)
       val toks = Seq.fill(nt)(vocab(rnd.nextInt(vocab.size))).distinct
       val lang = if (rnd.nextBoolean()) "en" else "fr"
       (i, toks.mkString(" "), lang, (20 + rnd.nextInt(80)).toLong)
     }
-    val got = Dedup.jaccardPairs(
-        docs.toDF("doc_id", "text", "lang", "n_chars"),
-        "doc_id", "text", "lang", "n_chars", sizeBand = 30, threshold = 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    // semantic edges: NULL blocks pair with nothing (not even with
+    // each other), and the size band is inclusive — 201/202 differ by
+    // exactly sizeBand, 202/203 by sizeBand + 1
+    val edges = Seq(
+      (150L, "p q r s t", null, 40L),
+      (151L, "p q r s t", null, 40L),
+      (152L, "p q r s t", "en", 40L),
+      (201L, "u v w x y", "en", 200L),
+      (202L, "u v w x y", "en", 230L),
+      (203L, "u v w x y", "en", 261L))
+    val docs = random ++ edges
+    val df = docs.toDF("doc_id", "text", "lang", "n_chars")
     def r4(d: Double) = math.floor(d * 10000.0 + 0.5) / 10000.0
     val sets = docs.map { case (id, t, l, sz) => (id, t.split(" ").toSet, l, sz) }
-    val expect = (for {
-      a <- sets; b <- sets
-      if a._1 < b._1 && a._3 == b._3 && math.abs(a._4 - b._4) <= 30
-      inter = (a._2 & b._2).size.toDouble
-      j = inter / (a._2.size + b._2.size - inter)
-      if j > 0.5
-    } yield (a._1, b._1, r4(j))).toSet
-    assert(expect.nonEmpty, "degenerate fixture: no qualifying pairs")
-    assert(got === expect)
-  }
-
-  test("jaccardPairs: verify-join output is broadcast-gate-independent " +
-    "(byte-size gate can fall to the shuffle plan without changing pairs)") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(15)
-    val vocab = ('a' to 'z').map(_.toString)
-    val docs = (1L to 60L).map { i =>
-      val toks = Seq.fill(2 + rnd.nextInt(8))(vocab(rnd.nextInt(vocab.size))).distinct
-      (i, toks.mkString(" "), "en", (20 + rnd.nextInt(40)).toLong)
-    }.toDF("doc_id", "text", "lang", "n_chars")
-    def run(maxDocs: Long, maxBytes: Long) =
-      Dedup.jaccardPairs(docs, "doc_id", "text", "lang", "n_chars",
-          sizeBand = 30, threshold = 0.5,
-          maxBroadcastDocs = maxDocs, maxBroadcastBytes = maxBytes)
+    // 0.5 runs the kernel's integer threshold test, 0.65 its double
+    // fallback
+    for (t <- Seq(0.5, 0.65)) {
+      val got = Dedup.jaccardPairs(df, "doc_id", "text", "lang", "n_chars",
+          sizeBand = 30, threshold = t)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val broadcasted = run(1000000L, 1L << 30)
-    val shuffled = run(0L, 0L)           // gate closed: sort-merge path
-    assert(broadcasted.nonEmpty)
-    assert(shuffled === broadcasted)
+      val expect = (for {
+        a <- sets; b <- sets
+        if a._1 < b._1 && a._3 != null && a._3 == b._3 && math.abs(a._4 - b._4) <= 30
+        inter = (a._2 & b._2).size.toDouble
+        j = inter / (a._2.size + b._2.size - inter)
+        if j > t
+      } yield (a._1, b._1, r4(j))).toSet
+      assert(expect.nonEmpty, s"degenerate fixture at $t: no qualifying pairs")
+      assert(expect.contains((201L, 202L, 1.0)) && !expect.exists(p => p._2 == 203L))
+      assert(got === expect, s"threshold $t")
+      assert(!got.exists(p => Set(p._1, p._2).exists(Set(150L, 151L))), "NULL block paired")
+    }
   }
 }

@@ -61,21 +61,19 @@ class PrefixJoinSpec extends SparkSpec {
     val docs = corpus.collect().map(r => (r.getLong(0), r.getString(1)))
       .toSeq.toDF("doc_id", "text")
 
-    def plan(maxVocab: Long, maxDocs: Long): String = {
+    def plan(maxVocab: Long): String = {
       val df = PrefixJoin.jaccardPairsPrefix(
-        s2, docs, "doc_id", "text", 0.7, maxBroadcastVocab = maxVocab,
-        maxBroadcastDocs = maxDocs)
+        s2, docs, "doc_id", "text", 0.7, maxBroadcastVocab = maxVocab)
       df.count()
       val p = df.queryExecution.executedPlan.toString
       s2.catalog.clearCache()
       p
     }
-    // both size gates hinted under the defaults (vocab rank + the two
-    // verify sides), both dropped when the measured counts exceed the
-    // gates — a 100M-term vocabulary or a billion-doc corpus must
-    // never force a multi-GB broadcast
-    assert(plan(Long.MaxValue, Long.MaxValue).contains("BroadcastHashJoin"))
-    assert(!plan(0L, 0L).contains("BroadcastHashJoin"))
+    // the vocab rank is the only hinted broadcast (the fused join has
+    // no verify side to broadcast): hinted under the default gate,
+    // dropped when the measured vocabulary exceeds it
+    assert(plan(Long.MaxValue).contains("BroadcastHashJoin"))
+    assert(!plan(0L).contains("BroadcastHashJoin"))
   }
 
   test("results identical whether the vocab rank broadcasts or shuffles") {
@@ -85,6 +83,37 @@ class PrefixJoinSpec extends SparkSpec {
         maxBroadcastVocab = 0L)
       .collect().map(_.toSeq).toSet
     assert(a === b && a.nonEmpty)
+  }
+
+  test("containment join equals brute force: directed, minSize on the coveree only") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(26)
+    val vocab = ('a' to 'p').map(_.toString)
+    // random sets plus planted ones: 200 (2 tokens, under minSize)
+    // may cover others but is never a coveree — without the floor
+    // (200, 201) would qualify at 1.0; 203 ⊂ 201 only one way round
+    val docs = (1L to 80L).map { i =>
+      (i, Seq.fill(1 + rnd.nextInt(9))(vocab(rnd.nextInt(vocab.size))).distinct.mkString(" "))
+    } ++ Seq((200L, "x1 x2"), (201L, "x1 x2 x3 x4 x5 x6"), (203L, "x1 x2 x3"),
+      (204L, "x1 x2 y9"))
+    val sets = docs.map { case (id, t) => id -> t.split(" ").toSet }
+    def r4(d: Double) = math.floor(d * 10000.0 + 0.5) / 10000.0
+    // 0.6 runs the kernel's integer threshold test, 0.55 its double
+    // fallback
+    for (t <- Seq(0.6, 0.55)) {
+      val got = PrefixJoin.containmentPairsPrefix(spark, docs.toDF("doc_id", "text"),
+          "doc_id", "text", t, minSize = 3)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      val expect = (for {
+        (a, sa) <- sets; (b, sb) <- sets
+        if a != b && sa.size >= 3
+        c = (sa & sb).size.toDouble / sa.size
+        if c > t
+      } yield (a, b, r4(c))).toSet
+      assert(got === expect, s"threshold $t")
+      assert(got.contains((203L, 201L, 1.0)) && !got.exists(p => p._1 == 201L && p._2 == 203L))
+      assert(got.contains((204L, 200L, 0.6667)) && !got.exists(_._1 == 200L))
+    }
   }
 
   test("string ids survive: no silent long-cast collapse") {

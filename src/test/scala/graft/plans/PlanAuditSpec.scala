@@ -158,8 +158,8 @@ class PlanAuditSpec extends SparkSpec {
   test("q78 prefix join build: rank translation broadcasts, candidates stay equi-joins") {
     // the intended shape (pinned after the r9 timing investigation):
     // the vocabulary rank side is broadcast while it fits
-    // maxBroadcastVocab, and neither the candidate self-join nor the
-    // verify joins may degenerate to a product plan
+    // maxBroadcastVocab, and the fused candidate + verify self-join
+    // may not degenerate to a product plan
     val plan = prefixJoinBuildPlan()
     assert(plan.contains("BroadcastHashJoin"), plan.take(800))
     assert(!plan.contains("CartesianProduct"), plan.take(800))
